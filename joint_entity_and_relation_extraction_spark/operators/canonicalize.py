@@ -2,17 +2,13 @@
 GraphFrames-style iterative DataFrame joins, then canonical-id rewrite of
 triple endpoints.
 
-Distributed algorithms (both implemented, same join shapes):
-- `_star_contract` (default): alternating large-star/small-star edge
-  contraction (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", MR-CC) — O(log n) rounds on ANY graph shape, including the
-  chain-shaped near-dup graphs `dedup_clusters` can produce at corpus
-  scale.
-- `_propagate`: min-label propagation, O(component diameter) rounds —
-  optimal for the star-shaped entity-alias graphs (diameter ≤ ~4) and
-  kept selectable for them.
-Each round localCheckpoints to truncate lineage (SURVEY.md §4.3); both
-paths are property-tested equal to driver union-find.
+Above DRIVER_CC_MAX_EDGES the distributed algorithm is `_star_contract`:
+alternating large-star/small-star edge contraction (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", MR-CC) — O(log n) rounds
+on ANY graph shape, including the chain-shaped near-dup graphs
+`dedup_clusters` can produce at corpus scale. Each round localCheckpoints
+to truncate lineage (SURVEY.md §4.3); both it and the driver union-find
+are property-tested equal to the single-process oracle.
 """
 
 from __future__ import annotations
@@ -31,38 +27,27 @@ DRIVER_CC_MAX_EDGES = 2_000_000
 
 
 def connected_components(edges: DataFrame, max_iter: int = 30,
-                         force_distributed: bool = False,
-                         algorithm: str = "star") -> DataFrame:
+                         force_distributed: bool = False) -> DataFrame:
     """edges(src:long, dst:long) undirected → labels(node:long,
     component:long) where component = min node id in the component.
     Nodes appearing in no edge are absent (callers coalesce to self).
 
     Hybrid strategy: small (dictionary-sized) graphs are union-found on
     the driver in one collect — O(E α(E)) and zero shuffle; larger graphs
-    run distributed `algorithm`: "star" (large-star/small-star, O(log n)
-    rounds, safe for any diameter) or "propagate" (min-propagation,
-    O(diameter) rounds, fine for star-shaped alias graphs). All paths
-    produce identical labels (property-tested). The dispatch decision is
-    a distributed count() — never a collect — so a too-big edge set costs
+    run the distributed large-star/small-star contraction (O(log n)
+    rounds, safe for any diameter). Both paths produce identical labels
+    (property-tested). The dispatch decision is a distributed count() —
+    never a collect — so a too-big edge set costs
     one cheap aggregate instead of funnelling 2M+ rows through one task
     into driver memory (round-1 probe); the eager-false localCheckpoint
     makes the count and the following collect share one lineage
     evaluation instead of recomputing the upstream resolution twice
     (ADVICE r02)."""
-    if algorithm not in ("star", "propagate"):
-        # ADVICE r03: a typo ('Star', 'largestar') must not silently fall
-        # through to the O(diameter) propagate path — on chain-shaped
-        # graphs that blows max_iter, the exact failure the star path
-        # exists to avoid.
-        raise ValueError(
-            f"algorithm must be 'star' or 'propagate', got {algorithm!r}")
     if not force_distributed:
         edges = edges.localCheckpoint(eager=False)
         if edges.count() <= DRIVER_CC_MAX_EDGES:
             return _driver_union_find(edges.sparkSession, edges.collect())
-    if algorithm == "star":
-        return _star_contract(edges, max_iter)
-    return _propagate(edges, max_iter)
+    return _star_contract(edges, max_iter)
 
 
 def _driver_union_find(spark, edge_rows) -> DataFrame:
@@ -150,51 +135,6 @@ def _star_contract(edges: DataFrame, max_iter: int = 30) -> DataFrame:
                 F.coalesce(F.col("component"), F.col("node"))
                 .alias("component"))
     )
-
-
-def _propagate(edges: DataFrame, max_iter: int = 30) -> DataFrame:
-    # the working set is label-sized (nodes), tiny next to the corpus —
-    # pin a modest partition count so each of the O(diameter) iterations
-    # schedules few tasks instead of 2x-cores empty ones
-    nparts = max(4, edges.sparkSession.sparkContext.defaultParallelism // 4)
-    bidir = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .repartition(nparts, "u")
-        .localCheckpoint()
-    )
-    labels = (
-        bidir.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            bidir.join(labels, bidir.v == labels.node)
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-                (F.col("nbr_component") < F.col("component")).alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        n_changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
-    return labels
 
 
 def assign_components(links: DataFrame, labels: DataFrame) -> DataFrame:

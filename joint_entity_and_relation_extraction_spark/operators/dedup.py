@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pandas as pd
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -105,6 +105,13 @@ def _capped_groups(ex: DataFrame, key: str, max_df: int) -> DataFrame:
             .select("ds"))
 
 
+#: every (d1 < d2) pair inside one :func:`_capped_groups` doc list — a
+#: codegen'd nested transform over the sorted array, C(group, 2) structs
+_IN_GROUP_PAIRS = ("flatten(transform(ds, (x, i) -> "
+                   "transform(slice(ds, i + 2, size(ds)), "
+                   "y -> named_struct('d1', x, 'd2', y))))")
+
+
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
                         threshold: float = 0.2,
                         max_df: int = MAX_SHINGLE_DF) -> DataFrame:
@@ -135,12 +142,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
         eager=False)
     sizes = (grouped.select(F.explode("ds").alias("doc_id"))
              .groupBy("doc_id").agg(F.count("*").alias("n_sh")))
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> named_struct('d1', x, 'd2', y))))")
     pairs = (
-        grouped.select(F.explode(pair_expr).alias("p"))
+        grouped.select(F.explode(F.expr(_IN_GROUP_PAIRS)).alias("p"))
         .groupBy(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
         .agg(F.count("*").alias("inter"))
     )
@@ -288,6 +291,64 @@ def minhash_bands_udf(hashes: pd.Series) -> pd.Series:
                       for i in range(n)])
 
 
+def _probe_candidates(new_bands: DataFrame,
+                      probe_bands: DataFrame) -> DataFrame:
+    """(d1 < d2) candidate ids from probing ``probe_bands`` (which may
+    contain ``new_bands`` itself) with a batch's own (doc_id, band, key)
+    rows — every pair that shares a band key and touches the batch,
+    each exactly once however many bands it collides in."""
+    a, b = new_bands.alias("a"), probe_bands.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.key") == F.col("b.key"))
+               & (F.col("a.doc_id") != F.col("b.doc_id")))
+        .select(F.least("a.doc_id", "b.doc_id").alias("d1"),
+                F.greatest("a.doc_id", "b.doc_id").alias("d2"))
+        .dropDuplicates(["d1", "d2"])
+    )
+
+
+def _verify_candidates(docs: DataFrame, cand: DataFrame,
+                       project: Column) -> DataFrame:
+    """The ONE candidate-scoped verify join: ``cand`` (d1, d2, ...) gets
+    the aliased per-doc ``project`` column of both sides, as ``<name>1``
+    and ``<name>2``, computed over the candidate docs only.
+
+    The semi-join prunes ``docs`` to the candidate ids BEFORE the
+    projection, so the projection and both verify joins are
+    O(candidates), not corpus-sized — rows the inner joins would drop
+    anyway, so output is identical. The candidate pairs feed the doc-id
+    union AND the verify join, and the projected docs feed both verify
+    sides → both localCheckpointed, so neither subtree runs twice.
+    Plan-gated by test_plan_quality's
+    test_incremental_dedup_verify_is_candidate_scoped."""
+    cand = cand.localCheckpoint(eager=False)
+    cand_docs = (cand.select(F.col("d1").alias("doc_id"))
+                 .union(cand.select(F.col("d2").alias("doc_id")))
+                 .dropDuplicates(["doc_id"]))
+    side = (docs.join(cand_docs, "doc_id", "left_semi")
+            .select("doc_id", project)
+            .localCheckpoint(eager=False))
+    name = side.columns[1]
+    s1 = side.select(F.col("doc_id").alias("d1"),
+                     F.col(name).alias(f"{name}1"))
+    s2 = side.select(F.col("doc_id").alias("d2"),
+                     F.col(name).alias(f"{name}2"))
+    return cand.join(s1, "d1").join(s2, "d2")
+
+
+def _jaccard_filter(verified: DataFrame, threshold: float) -> DataFrame:
+    """Exact shingle Jaccard of :func:`_verify_candidates` rows projected
+    with ``sh`` → (d1, d2, jaccard) at or above ``threshold``."""
+    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
+    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
+    return (
+        verified.withColumn("jaccard", F.round(inter / union, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("d1", "d2", "jaccard")
+    )
+
+
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
                       threshold: float = 0.2) -> DataFrame:
     """MinHash-LSH near-dup pairs: shingle → 64 minhashes → 16 banded keys
@@ -316,43 +377,21 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
     b = banded.alias("b")
     # candidate id pairs first — a pair colliding in several bands is
     # deduped BEFORE the (wide) shingle arrays are joined back, so the
-    # band-join shuffle moves only (id, id) rows. Checkpointed: the ids
-    # feed the candidate-doc semi-join AND the verify join (r08, same
-    # shape as minhash_incremental_pairs — CLAUDE.md shared-subtree
-    # invariant).
+    # band-join shuffle moves only (id, id) rows
     cand_ids = (
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.key") == F.col("b.key"))
                & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .dropDuplicates(["d1", "d2"])
-        .localCheckpoint(eager=False)
     )
-    # exact-Jaccard verify over CANDIDATE docs only (r08, guide §3.2):
-    # the r07 verify joined both pair sides through the FULL corpus
-    # shingle projection — two more corpus scans + two corpus-wide
-    # shuffles per run. Candidates ≈ true pairs at the chosen (b, r)
-    # S-curve, so the semi-join bounds the shingle recomputation and
-    # both verify joins at O(candidates) while keeping verification
-    # exact — the pair set is unchanged (pytest parity vs the ngram
-    # witness). The candidate shingles feed both verify sides →
-    # localCheckpoint.
-    cand_docs = (cand_ids.select(F.col("d1").alias("doc_id"))
-                 .union(cand_ids.select(F.col("d2").alias("doc_id")))
-                 .dropDuplicates(["doc_id"]))
-    sh = (read_docs(spark, sf_dir).join(cand_docs, "doc_id", "left_semi")
-          .select("doc_id", _shingles_expr(n).alias("sh"))
-          .localCheckpoint(eager=False))
-    s1 = sh.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))
-    s2 = sh.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
-    cand = cand_ids.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    return (
-        cand.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    # exact-Jaccard verify over CANDIDATE docs only: candidates ≈ true
+    # pairs at the chosen (b, r) S-curve, so the verify costs
+    # O(candidates) and the pair set is unchanged (pytest parity vs the
+    # ngram witness)
+    return _jaccard_filter(
+        _verify_candidates(read_docs(spark, sf_dir), cand_ids,
+                           _shingles_expr(n).alias("sh")), threshold)
 
 
 def band_index(docs: DataFrame, n: int = 2) -> DataFrame:
@@ -394,47 +433,13 @@ def minhash_incremental_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
                .withColumn("is_new", (F.col("doc_id") % mod) == 0)
                .localCheckpoint(eager=False))
     new_idx = all_idx.filter("is_new").drop("is_new")
-    probe_side = all_idx.drop("is_new")
-    a, b = new_idx.alias("a"), probe_side.alias("b")
-    cand_ids = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .select(F.least("a.doc_id", "b.doc_id").alias("d1"),
-                F.greatest("a.doc_id", "b.doc_id").alias("d2"))
-        .dropDuplicates(["d1", "d2"])
-        # the candidate set is tiny (pairs touching the new batch) but
-        # feeds BOTH the cand_docs semi-join and the final verify join —
-        # without a checkpoint the band-probe join and both band-index
-        # builds execute twice (measured 5.1s vs 3.5s on the bench suite)
-        .localCheckpoint(eager=False)
-    )
-    # exact-Jaccard verify over CANDIDATE docs only: at real scale the
-    # shingle table is corpus-sized, and joining both pair sides through
-    # it was 2 extra wide shuffles per batch (VERDICT r04 'What's wrong'
-    # #4). The candidate ids are tiny, so the semi-join reduces the
-    # shingle stage + both verify joins to O(candidates) while keeping
-    # the verification exact — pairs unchanged (pytest-pinned equality
-    # with the full-corpus run, test_dedup_similarity).
-    cand_docs = (cand_ids.select(F.col("d1").alias("doc_id"))
-                 .union(cand_ids.select(F.col("d2").alias("doc_id")))
-                 .dropDuplicates(["doc_id"]))
-    # the candidate shingles feed BOTH verify sides — without a
-    # checkpoint the scan + semi-join + shingle projection runs twice
-    # (r08; CLAUDE.md shared-subtree invariant)
-    sh = (docs.join(cand_docs, "doc_id", "left_semi")
-          .select("doc_id", _shingles_expr(n).alias("sh"))
-          .localCheckpoint(eager=False))
-    s1 = sh.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))
-    s2 = sh.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
-    cand = cand_ids.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    return (
-        cand.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    # the candidate set is tiny (pairs touching the new batch), so the
+    # candidate-scoped verify never shingles the corpus — pairs equal the
+    # full-corpus run restricted to the batch (test_dedup_similarity)
+    cand_ids = _probe_candidates(new_idx, all_idx.drop("is_new"))
+    return _jaccard_filter(
+        _verify_candidates(docs, cand_ids, _shingles_expr(n).alias("sh")),
+        threshold)
 
 
 # --- SimHash ----------------------------------------------------------------
@@ -541,12 +546,8 @@ def winnow_pairs(spark: SparkSession, sf_dir: str, k: int = 5, w: int = 8,
     fps = (winnow_fingerprint(spark, sf_dir, k=k, w=w)
            .select("doc_id", "fp_hash").distinct())
     grouped = _capped_groups(fps, "fp_hash", max_df)
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> named_struct('d1', x, 'd2', y))))")
     return (
-        grouped.select(F.explode(pair_expr).alias("p"))
+        grouped.select(F.explode(F.expr(_IN_GROUP_PAIRS)).alias("p"))
         .groupBy(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
         .agg(F.count("*").alias("n_common_fp"))
         .filter(F.col("n_common_fp") >= min_common)
@@ -1075,28 +1076,13 @@ def edit_verify_pairs_lsh(spark: SparkSession, sf_dir: str, n: int = 2,
 
 def _edit_verify_of(spark: SparkSession, sf_dir: str, cand: DataFrame,
                     max_dist: int) -> DataFrame:
-    # candidate-scoped prefix table (r08, guide §3.2): the r07 form
-    # joined the candidate pairs against the FULL corpus prefix
-    # projection twice — two corpus-wide shuffles to verify a
-    # candidate-sized pair set. The semi-join prunes the prefix table to
-    # candidate docs first (rows the inner joins would drop anyway —
-    # output identical); the pair table feeds the doc-id union AND the
-    # verify join, the pruned prefixes feed both verify sides → both
-    # localCheckpointed (CLAUDE.md shared-subtree invariant).
-    cand = cand.localCheckpoint(eager=False)
-    cand_docs = (cand.select(F.col("d1").alias("doc_id"))
-                 .union(cand.select(F.col("d2").alias("doc_id")))
-                 .dropDuplicates(["doc_id"]))
-    pre = (read_docs(spark, sf_dir).join(cand_docs, "doc_id", "left_semi")
-           .select("doc_id", F.substring("text", 1, EDIT_PREFIX).alias("pre"))
-           .localCheckpoint(eager=False))
-    pa_ = pre.select(F.col("doc_id").alias("d1"), F.col("pre").alias("p1"))
-    pb_ = pre.select(F.col("doc_id").alias("d2"), F.col("pre").alias("p2"))
+    v = _verify_candidates(
+        read_docs(spark, sf_dir), cand,
+        F.substring("text", 1, EDIT_PREFIX).alias("p"))
     dist = F.levenshtein("p1", "p2")
     sim = F.round(F.lit(1.0) - dist.cast("double")
                   / F.greatest(F.length("p1"), F.length("p2")), 6)
-    return (cand.join(pa_, "d1").join(pb_, "d2")
-            .select("d1", "d2", "jaccard",
-                    dist.cast("bigint").alias("edit_dist"),
-                    sim.alias("edit_sim"))
+    return (v.select("d1", "d2", "jaccard",
+                     dist.cast("bigint").alias("edit_dist"),
+                     sim.alias("edit_sim"))
             .filter(F.col("edit_dist") <= max_dist))

@@ -69,27 +69,16 @@ def test_link_parity_spark_vs_oracle(spark_links, oracle_full):
     assert "lsh" in methods or "none" in methods
 
 
-@pytest.mark.parametrize("force_distributed,algorithm",
-                         [(False, "star"), (True, "star"),
-                          (True, "propagate")])
-def test_cc_matches_union_find(spark, force_distributed, algorithm):
+@pytest.mark.parametrize("force_distributed", [False, True])
+def test_cc_matches_union_find(spark, force_distributed):
     rng = random.Random(7)
     edges = {(rng.randrange(200), rng.randrange(200)) for _ in range(150)}
     edges |= {(1000 + i, 1000 + i + 1) for i in range(25)}  # a 26-node chain
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
     got = {(r.node, r.component) for r in C.connected_components(
-        df, force_distributed=force_distributed,
-        algorithm=algorithm).collect()}
+        df, force_distributed=force_distributed).collect()}
     want = oracle.connected_components(edges)
     assert got == set(want.items())
-
-
-def test_cc_rejects_unknown_algorithm(spark):
-    """A typo ('Star', 'largestar') must raise, not silently fall through
-    to the O(diameter) propagate path (ADVICE r03)."""
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="algorithm"):
-        C.connected_components(df, algorithm="Star")
 
 
 def test_star_contraction_logn_rounds_on_long_chain(spark):
@@ -105,8 +94,7 @@ def test_star_contraction_logn_rounds_on_long_chain(spark):
     edges = {(ids[i], ids[i + 1]) for i in range(len(ids) - 1)}
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
     got = {(r.node, r.component) for r in C.connected_components(
-        df, max_iter=12, force_distributed=True,
-        algorithm="star").collect()}
+        df, max_iter=12, force_distributed=True).collect()}
     want = oracle.connected_components(edges)
     assert got == set(want.items())
     assert len({c for _, c in got}) == 1  # one component, rooted at min id

@@ -255,8 +255,9 @@ def test_incremental_dedup_verify_is_candidate_scoped(spark):
     hides the semi-join from this gate — so the gate builds the frame
     with checkpointing bypassed to assert the actual operator graph
     (the checkpoint only materializes that graph, it cannot change it).
-    The r08 minhash_lsh_pairs verify gets the same candidate-scoped
-    shape, asserted here too."""
+    The minhash_lsh_pairs and edit_verify_pairs verifies go through the
+    same dedup._verify_candidates helper, so they are asserted here too
+    (ngram candidate generation has no semi-join of its own)."""
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
     from joint_entity_and_relation_extraction_spark.operators import dedup as DD
@@ -264,14 +265,15 @@ def test_incremental_dedup_verify_is_candidate_scoped(spark):
     real_ckpt = CDF.localCheckpoint
     CDF.localCheckpoint = lambda self, eager=True: self
     try:
-        df = DD.minhash_incremental_pairs(spark, SF001, n=2, threshold=0.2)
-        p = df._jdf.queryExecution().optimizedPlan().toString()
-        full = DD.minhash_lsh_pairs(spark, SF001, n=2, threshold=0.2)
-        p_full = full._jdf.queryExecution().optimizedPlan().toString()
+        plans = {
+            f.__name__: f(spark, SF001, n=2, threshold=0.2)
+            ._jdf.queryExecution().optimizedPlan().toString()
+            for f in (DD.minhash_incremental_pairs, DD.minhash_lsh_pairs,
+                      DD.edit_verify_pairs)}
     finally:
         CDF.localCheckpoint = real_ckpt
-    assert "LeftSemi" in p
-    assert "LeftSemi" in p_full
+    for name, p in plans.items():
+        assert "LeftSemi" in p, name
 
 
 def test_lsh_graph_degrees_plan_is_banded_equi_join(spark):
